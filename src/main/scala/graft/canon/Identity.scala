@@ -8,7 +8,7 @@ import java.security.MessageDigest
   * `app/services/data_integrity_manager.py:49-54`,
   * `app/controllers/ingestion_controllers.py:31-41`):
   *
-  *   file_id      = sha256(file_path + "|" + file_type)
+  *   file_id      = sha256(file_path + "|" + lower(file_type))
   *   ingestion_id = sha256(file_id + "|" + version)
   *   chunk_id     = s"$ingestionId:$chunkNumber"
   *
@@ -22,8 +22,11 @@ object Identity {
       .digest(s.getBytes(StandardCharsets.UTF_8))
       .map("%02x".format(_)).mkString
 
+  /** The file type is normalized to lower case, like dispatch: "JSON" and
+    * "json" over the same file are the same ingestion, and every caller
+    * derives the same id by construction. */
   def fileId(filePath: String, fileType: String): String =
-    sha256Hex(s"$filePath|$fileType")
+    sha256Hex(s"$filePath|${fileType.toLowerCase}")
 
   def ingestionId(fileId: String, version: String): String =
     sha256Hex(s"$fileId|$version")

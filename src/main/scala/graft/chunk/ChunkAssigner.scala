@@ -142,7 +142,7 @@ object ChunkAssigner {
 
   def assignByBytes(df: DataFrame, orderCols: Seq[Column], budgetBytes: Long,
       sizeCol: Column, lastChunk: Long = -1L): DataFrame = {
-    // "__rn", not "rn": ingestion callers pass frames that already carry an
+    // "__rn", not "rn": callers may pass frames that already carry an
     // input-order `rn` (which is itself the order key)
     val withRn = withRowNumber(df.withColumn("__size", sizeCol), orderCols,
       rnName = "__rn")

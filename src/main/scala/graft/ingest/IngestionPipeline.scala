@@ -2,12 +2,19 @@ package graft.ingest
 
 import graft.api.{IngestRequest, IngestionState}
 import graft.canon.{CanonicalJson, Identity}
-import graft.chunk.ChunkAssigner
 import graft.sink.OrderedAckHttpSink
 import graft.state.IngestionStateStore
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import java.nio.charset.StandardCharsets
+import java.security.MessageDigest
+import org.apache.commons.codec.binary.Hex
+import org.apache.spark.Partitioner
+import org.apache.spark.sql.{DataFrame, GraftSql, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import scala.collection.mutable.ArrayBuffer
 
 /** End-to-end ingestion (SURVEY.md §3.4): scan → canonical serialize → chunk
   * → per-chunk checksum agg → ordered ACK-gated delivery → crash-safe resume.
@@ -25,9 +32,6 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * (`chunk_data_integrity_validator.py:44-46`).
   */
 object IngestionPipeline {
-
-  final case class ChunkRow(chunkNumber: Long, nRecords: Long, checksum: String,
-      canonicalRecords: Seq[String])
 
   final case class Result(ingestionId: String, chunksSent: Long, chunksSkipped: Long,
       totalRecords: Long, state: Option[IngestionState])
@@ -92,48 +96,160 @@ object IngestionPipeline {
     df.filter(anyNonEmpty)
   }
 
-  /** Stable 0-based row number in input order (file order for file sources:
-    * partitions enumerate (file, block) deterministically). Delegates to the
-    * InternalRow + JoinedRow path — no per-row external-Row conversion, no
-    * sort, no single-partition funnel. */
-  def withInputOrderRn(df: DataFrame): DataFrame =
-    ChunkAssigner.withInputOrderRowNumber(df)
-
-  /** Distributed chunk construction: returns (chunkNumber, nRecords,
-    * checksum, orderedCanonicalRecords) — one row per chunk, built with
-    * map-side parallelism and a single groupBy shuffle. Numbering starts at
-    * `lastChunk + 1` (streaming batches continue a running sequence). */
+  /** Distributed chunk construction in input order: one row per chunk,
+    * `(chunk_number, n_records, records, checksum)`, numbered densely from
+    * `lastChunk + 1` (streaming batches continue a running sequence). The
+    * partitions hold contiguous ascending chunk ranges, so delivery walks
+    * them in order with no further shuffle.
+    *
+    * Shape: records are rendered to canonical JSON in place, over the
+    * source's own partitions, whose order is the input order (for file
+    * sources partitions enumerate (file, block) deterministically). The
+    * packing state entering every input partition is found without moving
+    * payloads: a byte budget (A10) chains one small fold job per partition
+    * over the rendered sizes; a record count (A9) is arithmetic over one
+    * per-partition count job that renders nothing.
+    * Each partition then tags its rows with their chunk number locally, and
+    * ONE shuffle with exact chunk-range bounds (no sampling) brings each
+    * chunk's records together in input order. Chunks are assembled while
+    * streaming the sorted rows; the checksum is SHA-256 over
+    * `"[" + records.mkString(",") + "]"`. */
   def buildChunks(df: DataFrame, request: IngestRequest,
-      lastChunk: Long = -1L): DataFrame = {
-    val withRec = withInputOrderRn(df)
-      .withColumn("rec", CanonicalJson(struct(df.columns.map(col): _*)))
-    val chunked = request.chunkSizeByRecords match {
-      case Some(n) =>
-        withRec.withColumn("chunk_number", lit(lastChunk + 1) + expr(s"rn div $n"))
-      case None =>
-        // A10/A13: byte-budget greedy packing over serialized record sizes
-        ChunkAssigner.assignByBytes(
-          withRec, Seq(col("rn")), request.chunkSizeByMemory.get,
-          octet_length(col("rec")).cast("long"), lastChunk = lastChunk)
+      lastChunk: Long = -1L): DataFrame =
+    buildChunksCounted(df, request, lastChunk)._1
+
+  /** [[buildChunks]] together with its chunk count, which is known before
+    * any payload moves. */
+  def buildChunksCounted(df: DataFrame, request: IngestRequest,
+      lastChunk: Long = -1L): (DataFrame, Long) = {
+    val spark = df.sparkSession
+    val sc = spark.sparkContext
+    val schema = df.schema
+    val source = GraftSql.toInternalRdd(df)
+    val records = source.mapPartitions { rows =>
+      val sb = new java.lang.StringBuilder(256)
+      rows.map { r =>
+        sb.setLength(0)
+        CanonicalJson.write(sb, r, schema)
+        sb.toString.getBytes(StandardCharsets.UTF_8)
+      }
     }
-    chunked
-      .groupBy(col("chunk_number"))
-      .agg(count(lit(1)).as("n_records"),
-        transform(array_sort(collect_list(struct(col("rn"), col("rec")))),
-          x => x.getField("rec")).as("records"))
-      .withColumn("checksum",
-        sha2(concat(lit("["), array_join(col("records"), ","), lit("]")), 256))
-      .orderBy(col("chunk_number"))
+    val (budget, bySize) = request.chunkSizeByRecords match {
+      case Some(n) => (n.toLong, false)
+      case None => (request.chunkSizeByMemory.get, true)
+    }
+    // packing state entering each input partition; the last entry is the
+    // state after the whole input
+    val carries: Array[Carry] =
+      if (bySize)
+        (0 until records.getNumPartitions).scanLeft(Carry.start(lastChunk)) { (in, p) =>
+          sc.runJob(records, (it: Iterator[Array[Byte]]) => {
+            val k = new Packer(in, budget)
+            it.foreach(r => k.add(r.length))
+            k.carry
+          }, Seq(p)).head
+        }.toArray
+      else
+        sc.runJob(source, (it: Iterator[InternalRow]) => {
+          var n = 0L
+          while (it.hasNext) { it.next(); n += 1 }
+          n
+        }).scanLeft(0L)(_ + _).map(Carry.afterRecords(_, budget, lastChunk))
+    val last = carries.last
+    val nChunks = if (last.started) last.chunk - lastChunk else 0L
+
+    val tagged = records.mapPartitionsWithIndex { (p, it) =>
+      val k = new Packer(carries(p), budget)
+      it.map { r =>
+        val rn = k.rows
+        ((k.add(if (bySize) r.length else 1L), rn), r)
+      }
+    }
+    // one delivery range per shuffle partition, and never an empty range
+    val parts = math.min(nChunks, spark.sessionState.conf.numShufflePartitions.toLong).toInt
+    val chunks = tagged
+      .repartitionAndSortWithinPartitions(new ChunkRanges(lastChunk + 1, nChunks, parts))
+      .mapPartitions(assemble)
+    (GraftSql.internalCreateDataFrame(spark, chunks, ChunkSchema), nChunks)
+  }
+
+  private val ChunkSchema = StructType(Seq(
+    StructField("chunk_number", LongType, nullable = false),
+    StructField("n_records", LongType, nullable = false),
+    StructField("records", ArrayType(StringType, containsNull = false), nullable = false),
+    StructField("checksum", StringType, nullable = false)))
+
+  /** Greedy packing state: the open chunk's number and size, whether any
+    * record was seen, and how many were. */
+  private final case class Carry(chunk: Long, open: Long, started: Boolean, rows: Long)
+
+  private object Carry {
+    def start(lastChunk: Long): Carry = Carry(lastChunk + 1, 0L, started = false, 0L)
+
+    /** The state after `rows` unit-size records under a budget of `n`. */
+    def afterRecords(rows: Long, n: Long, lastChunk: Long): Carry =
+      if (rows == 0) start(lastChunk)
+      else Carry(lastChunk + 1 + (rows - 1) / n, (rows - 1) % n + 1, started = true, rows)
+  }
+
+  /** A10/A13 greedy rule (`json_reader.py:133`): a record starts a new chunk
+    * when the open chunk is non-empty and adding it would exceed the budget.
+    * Record-count chunking (A9) is the same rule with unit sizes. */
+  private final class Packer(in: Carry, budget: Long) {
+    private var chunk = in.chunk
+    private var open = in.open
+    private var started = in.started
+    var rows: Long = in.rows
+
+    /** Adds one record; returns its chunk number. */
+    def add(size: Long): Long = {
+      if (started && open + size > budget) { chunk += 1; open = 0L }
+      started = true
+      open += size
+      rows += 1
+      chunk
+    }
+
+    def carry: Carry = Carry(chunk, open, started, rows)
+  }
+
+  /** Exact range bounds over the known chunk numbers: partition j holds a
+    * contiguous ascending run of about nChunks / parts chunks. */
+  private final class ChunkRanges(first: Long, nChunks: Long, parts: Int)
+      extends Partitioner {
+    override def numPartitions: Int = parts
+    override def getPartition(key: Any): Int =
+      ((key.asInstanceOf[(Long, Long)]._1 - first) * parts / nChunks).toInt
+  }
+
+  /** Streams rows sorted by (chunk, input position) into one row per chunk. */
+  private def assemble(it: Iterator[((Long, Long), Array[Byte])]): Iterator[InternalRow] = {
+    val rows = it.buffered
+    new Iterator[InternalRow] {
+      override def hasNext: Boolean = rows.hasNext
+      override def next(): InternalRow = {
+        val chunk = rows.head._1._1
+        val recs = ArrayBuffer.empty[Any]
+        val md = MessageDigest.getInstance("SHA-256")
+        md.update('['.toByte)
+        while (rows.hasNext && rows.head._1._1 == chunk) {
+          val rec = rows.next()._2
+          if (recs.nonEmpty) md.update(','.toByte)
+          md.update(rec)
+          recs += UTF8String.fromBytes(rec)
+        }
+        md.update(']'.toByte)
+        InternalRow(chunk, recs.length.toLong, new GenericArrayData(recs.toArray),
+          UTF8String.fromString(Hex.encodeHexString(md.digest())))
+      }
+    }
   }
 
   /** Run one ingestion to completion (or terminal failure). Resumable: a
     * rerun with reIngestion=false continues after the last ACKed chunk. */
   def run(spark: SparkSession, request: IngestRequest, store: IngestionStateStore,
       nowMillis: => Long = System.currentTimeMillis()): Result = {
-    // identity uses the NORMALIZED file type — dispatch lowercases it, so
-    // "JSON" and "json" runs over the same file must resume the same
-    // ingestion rather than silently minting a fresh id and re-sending all
-    val fileId = Identity.fileId(request.filePath, request.fileType.toLowerCase)
+    val fileId = Identity.fileId(request.filePath, request.fileType)
     val version = Identity.version(request.reIngestion, nowMillis)
     val ingestionId = Identity.ingestionId(fileId, version)
 
@@ -144,12 +260,10 @@ object IngestionPipeline {
       case "excel" | "csv" => dropEmptyRows(scan(spark, request))
       case _ => scan(spark, request)
     }
-    val chunks = buildChunks(source, request).cache()
+    val (built, nChunks) = buildChunksCounted(source, request)
+    val chunks = built.cache()
     try {
-      val maxChunk = chunks.agg(max(col("chunk_number"))).collect()(0) match {
-        case r if r.isNullAt(0) => -1L
-        case r => r.getLong(0)
-      }
+      val maxChunk = nChunks - 1 // numbering starts at 0; -1 when empty
       val (sent, skipped, newTotal) = deliverChunksDistributed(chunks,
         ingestionId, store, request.callbackUrl, lastAcked, totalRecords, maxChunk)
       totalRecords = newTotal
@@ -180,9 +294,9 @@ object IngestionPipeline {
       store: IngestionStateStore, callbackUrl: String, lastAcked: Long,
       startingTotal: Long, maxChunk: Long): (Long, Long, Long) = {
     val spark = chunks.sparkSession
-    val skipped = chunks.filter(col("chunk_number") <= lastAcked).count() // A20
-    // buildChunks ends with orderBy(chunk_number): the (cached) chunks are
-    // already range-partitioned into contiguous ascending ranges, so the
+    val skipped = // A20; a fresh start skips nothing
+      if (lastAcked < 0) 0L else chunks.filter(col("chunk_number") <= lastAcked).count()
+    // buildChunks partitions hold contiguous ascending chunk ranges, so the
     // pending filter preserves global order with NO re-shuffle of payloads
     val rdd = chunks.filter(col("chunk_number") > lastAcked).rdd
     val sc = spark.sparkContext

@@ -28,9 +28,7 @@ object StreamingIngest {
   def start(spark: SparkSession, request: IngestRequest, store: IngestionStateStore,
       schema: StructType, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): (String, StreamingQuery) = {
-    // normalized file type, like the batch path: "Excel" and "excel" restarts
-    // must resume the same ingestion, not mint a fresh id and re-send
-    val fileId = Identity.fileId(request.filePath, request.fileType.toLowerCase)
+    val fileId = Identity.fileId(request.filePath, request.fileType)
     val ingestionId = Identity.ingestionId(fileId, "streaming")
 
     val source = request.fileType.toLowerCase match {

@@ -315,8 +315,8 @@ object TextAnalysis {
   // the packing slice is id-bounded: the DuckDB oracle must REPLAY the
   // greedy fold row-by-row (recursive CTE — O(N²) in the oracle engine),
   // so the test surface stays fixed-size at every scale factor while the
-  // engine-side fold stays fully distributed (and is e2e-exercised at
-  // full scale by the byte-budget ingest path)
+  // engine-side fold stays fully distributed (ChunkingLawsSpec checks
+  // assignByBytes directly; ingestion packs with its own input-order fold)
   private def q60(s: SparkSession, dir: String): DataFrame =
     packByTokens(Tables.documents(s, dir).filter(col("doc_id") < 2000),
       budgetTokens = 256L)

@@ -76,6 +76,30 @@ class ApiSpec extends AnyFunSuite {
     } finally { api.stop(0); receiver.stop(0); controller.shutdown() }
   }
 
+  test("an upper-case file_type returns the id its run persists under") {
+    // regression: the controller hashed the raw file_type, the pipeline the
+    // lower-cased one, so a "JSON" request returned an id with no state row
+    val (mock, receiver, callbackUrl) = MockPimCore.serve()
+    val store = IngestionStateStore.inMemory()
+    val controller = new IngestController(spark, store)
+    val (api, apiUrl) = IngestApiServer.serve(controller)
+    try {
+      val f = Files.createTempFile("graft_api_upper", ".json")
+      Files.writeString(f, (0 until 10).map(i => s"""{"id": $i}""").mkString("[", ",", "]"))
+      val (_, body) = post(s"$apiUrl/api/ingest",
+        s"""{"file_path": "${f.toString}", "file_type": "JSON",
+           | "callback_url": "$callbackUrl", "chunk_size_by_records": 4}""".stripMargin)
+      val iid = MiniJson.parse(body).asInstanceOf[MiniJson.JObj]
+        .get("ingestion_id").collect { case MiniJson.JStr(s) => s }.get
+      controller.awaitAll()
+      assert(controller.status(iid)._1.contains("DONE"))
+      assert(store.get(iid).exists(s =>
+        s.status == IngestionState.Completed && s.totalRecords == 10),
+        s"state row missing for the RETURNED id $iid — id drift")
+      assert(mock.completedCount == 1)
+    } finally { api.stop(0); receiver.stop(0); controller.shutdown() }
+  }
+
   test("concurrent ingestions of different files interleave safely") {
     // the reference runs each ingestion as an independent background task;
     // receiver-side ordering state is per ingestion_id (A24 is per-stream)
